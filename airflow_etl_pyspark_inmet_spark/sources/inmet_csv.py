@@ -14,11 +14,10 @@ the driver.
 This reader is order- and partition-independent: one globbed ``spark.read
 .text`` over all files, sections classified BY PATTERN (metadata lines match
 ``key:;``, header lines start with ``Data;``, data lines start with a date),
-metadata pivoted per-file with ``groupBy(file).pivot(key)``, body parsed with
-``from_csv`` against the (per-header-shape) schema, and the station code
-attached by a broadcast join on file name. Scales to any number of files with
-no driver materialization beyond the distinct header strings (one per format
-revision, a handful of bytes).
+metadata pivoted per-file with ``groupBy(file).pivot(key)``, and body parsed
+with ``from_csv`` against the schema of its file's header. Scales to any
+number of files; the only driver materialization is one ``(file, header)``
+row per file, which says which files share a header shape.
 
 Pattern safety: a data line always starts with a date (``2025/01/01;`` or
 ``01/01/2025;``), so it can never match the metadata pattern ``^[^;0-9][^;]*:;``.
@@ -33,6 +32,11 @@ from ..functions.cleaning import sanitize_name
 
 # Metadata line: non-empty, non-numeric-leading key, then ':;'.
 _META_LINE_RE = r"^[^;0-9][^;]*:;"
+# The same rule over a whole decoded file: every metadata line, up to its
+# line break. UNIX_LINES (?d) makes '\n' the only line terminator '^' sees
+# — Latin-1 byte 0x85 decodes to U+0085, which Java regex otherwise treats
+# as a line break too.
+_META_LINES_RE = r"(?dm)^[^;0-9\r\n][^;\r\n]*:;[^\r\n]*"
 
 # Reference key names -> canonical column names (job_parquet.py:81-82 rename
 # map, applied after ':'-strip + lowercase; we additionally sanitize).
@@ -81,24 +85,29 @@ def _lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _meta_lines(spark: SparkSession, path: str) -> DataFrame:
-    """All lines of all files decoded as ISO-8859-1 — the reference reads
-    the station-metadata section with that charset (job_parquet.py:63)
-    while the body is UTF-8 (:131). ``spark.read.text`` decodes UTF-8
-    only (irreversibly replacing invalid bytes), so the metadata path
-    reads raw bytes per file (``binaryFile``) and decodes JVM-side. One
-    row per file before the explode — INMET stations are one small file
-    each, so file-level parallelism is the scale axis here, same as the
-    text scan."""
+    """The metadata lines of every file, decoded as ISO-8859-1 — the
+    reference reads the station-metadata section with that charset
+    (job_parquet.py:63) while the body is UTF-8 (:131). ``spark.read.text``
+    decodes UTF-8 only (irreversibly replacing invalid bytes), so the
+    metadata path reads raw bytes per file (``binaryFile``) and decodes
+    JVM-side. One ``regexp_extract_all`` pulls only the lines matching
+    :data:`_META_LINE_RE`'s rule, so the thousands of body lines per file
+    are never split out or exploded. One row per file before the explode —
+    INMET stations are one small file each, so file-level parallelism is
+    the scale axis here, same as the text scan."""
     return (
         spark.read.format("binaryFile")
         .load(path)
         .select(
             _norm_src(F.col("path")).alias("_src"),
             F.explode(
-                F.split(F.decode(F.col("content"), "ISO-8859-1"), r"\r?\n")
+                F.regexp_extract_all(
+                    F.decode(F.col("content"), "ISO-8859-1"),
+                    F.lit(_META_LINES_RE),
+                    0,
+                )
             ).alias("value"),
         )
-        .filter(F.length(F.trim(F.col("value"))) > 0)
     )
 
 
@@ -114,8 +123,7 @@ def read_inmet_stations(spark: SparkSession, path: str) -> DataFrame:
     before sanitizing so ``REGIÃO:`` and ``REGIAO:`` pivot to the same
     ``regiao`` column.
     """
-    lines = _meta_lines(spark, path)
-    meta = lines.filter(F.col("value").rlike(_META_LINE_RE)).select(
+    meta = _meta_lines(spark, path).select(
         "_src",
         F.regexp_extract("value", r"^([^;]*):;", 1).alias("raw_key"),
         F.regexp_replace(F.substring_index("value", ":;", -1), ";+$", "").alias("val"),
@@ -149,43 +157,36 @@ def read_inmet_measurements(spark: SparkSession, path: str) -> DataFrame:
     as raw strings with sanitized header names, plus ``_src``.
 
     Replaces S4/S5/P6/F8 (text read + zipWithIndex skip + csv-on-RDD,
-    job_parquet.py:113-135). Strategy: classify lines by pattern, collect the
-    tiny set of DISTINCT header strings (one per INMET format revision), and
-    parse each header-shape group with ``from_csv`` under its own schema.
+    job_parquet.py:113-135). Strategy: classify lines by pattern, collect
+    one ``(file, header)`` row per file in one job, and parse each
+    header-shape group (one per INMET format revision) with ``from_csv``
+    under its own schema, selecting the group's body lines by file name.
     Files with reordered/renamed columns therefore still parse correctly —
-    by name, not position.
+    by name, not position. Body lines of a file without a header line are
+    dropped.
     """
     lines = _lines(spark, path)
     is_meta = F.col("value").rlike(_META_LINE_RE)
     is_header = F.col("value").startswith("Data;")
 
-    headers = [
-        r["value"]
-        for r in lines.filter(is_header).select("value").distinct().collect()
-    ]
-    if not headers:
+    header_of = dict(lines.filter(is_header).select("_src", "value").collect())
+    files_by_header: dict[str, list[str]] = {}
+    for src, header in header_of.items():
+        files_by_header.setdefault(header, []).append(src)
+    if not files_by_header:
         raise ValueError(f"no INMET header line found under {path}")
 
-    # Map each file to its header string (tiny frame: one row per file).
-    file_header = (
-        lines.filter(is_header)
-        .select("_src", F.col("value").alias("_header"))
-        .dropDuplicates(["_src"])
-    )
-
-    body = (
-        lines.filter(~is_meta & ~is_header)
-        .withColumn("value", F.regexp_replace("value", ";+$", ""))  # F8 trailing ';'
-        .join(F.broadcast(file_header), "_src")
+    body = lines.filter(~is_meta & ~is_header).withColumn(
+        "value", F.regexp_replace("value", ";+$", "")  # F8 trailing ';'
     )
 
     parsed_parts = []
-    for header in headers:
+    for header, files in files_by_header.items():
         raw_names = [h for h in header.rstrip(";").split(";")]
         names = _dedupe([sanitize_name(n) for n in raw_names])
         ddl = ", ".join(f"`{n}` STRING" for n in names)
         part = (
-            body.filter(F.col("_header") == header)
+            body.filter(F.col("_src").isin(files))
             .withColumn("_row", F.from_csv("value", ddl, {"sep": ";"}))
             .select("_src", "_row.*")
         )

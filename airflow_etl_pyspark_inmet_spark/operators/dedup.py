@@ -1073,40 +1073,51 @@ def connected_components(
     realistic graph: the default 20 handles chains of ~10^6 hops). The
     driver loop only checks a scalar convergence count per round;
     ``localCheckpoint`` truncates lineage so plans don't grow by round.
+    Node ids are non-NULL: a NULL id is outside the contract.
+
+    Every node carries a self-loop in the edge list, so one join plus
+    one min-aggregate per round yields both the propagated label (the
+    min over the node's own label and its neighbours') and, through the
+    self-loop row, the node's pre-round label ``_old``. The convergence
+    probe then reads the round's own checkpoint (``comp != _old``)
+    instead of joining it against the previous labels.
     """
+    a, b = F.col(a_col), F.col(b_col)
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        pairs.select(
+            F.explode(
+                F.array(
+                    *(
+                        F.struct(s.alias("src"), d.alias("dst"))
+                        for s, d in ((a, b), (b, a), (a, a), (b, b))
+                    )
+                )
+            ).alias("e")
         )
+        .select("e.*")
         .distinct()
         .transform(lineage_checkpoint_eager)
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
+    labels = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("node"), F.col("dst").alias("comp")
     )
     for _ in range(max_iter):
-        neighbor_min = (
+        # `propagated` feeds both sides of the pointer-jump self-join
+        # below, so it is checkpointed; otherwise each side recomputes
+        # the join + min-aggregate. A lazy checkpoint still runs the
+        # upstream shuffle stages at call time under AQE; only its final
+        # stage waits for the round's convergence probe.
+        propagated = (
             edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("comp").alias("n_comp"))
+            .groupBy(F.col("src").alias("node"))
+            .agg(
+                F.min("comp").alias("comp"),
+                F.min(F.when(F.col("src") == F.col("dst"), F.col("comp"))).alias(
+                    "_old"
+                ),
+            )
+            .transform(lineage_checkpoint)
         )
-        # r17 (optimization): checkpoint `propagated` — it feeds BOTH
-        # sides of the pointer-jump self-join below, and without the
-        # checkpoint each side recomputed the whole propagate step
-        # (edges ⋈ labels + min-agg + left join) — i.e. every round
-        # paid the heaviest join twice. Lazy like new_labels: the
-        # round's single changed-count action materializes both.
-        propagated = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))
-            ).alias("comp"),
-        ).transform(lineage_checkpoint)
         # pointer jump: comp <- comp's own label. Labels are node ids, so
         # every comp value has a row in `propagated`; the self-join is on
         # the same (node, comp)-sized frame — bounded by the candidate
@@ -1114,10 +1125,9 @@ def connected_components(
         ptr = propagated.select(
             F.col("node").alias("_pnode"), F.col("comp").alias("_pcomp")
         )
-        # lazy checkpoint: the changed-count below is the first action
-        # over new_labels, so it materializes the checkpoint as a side
-        # effect — one job per iteration instead of two (an eager
-        # checkpoint would run its own materialization job first).
+        # lazy: the probe below is the first action over new_labels, so
+        # it runs the final stage; the pointer-jump join's upstream
+        # stages run at call time (see lineage_checkpoint)
         new_labels = (
             propagated.join(ptr, propagated.comp == ptr._pnode, "left")
             .select(
@@ -1125,15 +1135,12 @@ def connected_components(
                 F.least(
                     F.col("comp"), F.coalesce(F.col("_pcomp"), F.col("comp"))
                 ).alias("comp"),
+                "_old",
             )
             .transform(lineage_checkpoint)
         )
         changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
+            new_labels.filter(F.col("comp") != F.col("_old")).limit(1).count()
         )
         labels = new_labels
         if changed == 0:

@@ -49,8 +49,17 @@ def lineage_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     one extra job launch (~50 ms locally) and removes the race: every
     consumer reads materialized blocks. Keep the default (lazy) for
     per-round iterative frames whose first action is the round's own
-    sequential convergence probe — there the materialization rides that
-    action and rebuild cost is one cached-block join.
+    sequential convergence probe — there the final stage's
+    materialization rides that action and rebuild cost is one
+    cached-block join.
+
+    Lazy is not job-free: under AQE, ``localCheckpoint(eager=False)``
+    builds the frame's RDD at call time, which runs every upstream
+    shuffle and broadcast stage as its own job right then; only the
+    final (result) stage waits for the first action. So a lazy
+    checkpoint of a frame with exchanges still starts Spark jobs while
+    the DataFrame is being built; only an exchange-free frame's lazy
+    checkpoint starts none.
 
     FAULT-TOLERANCE TRADE (r18, VERDICT r17 item 7): ``localCheckpoint``
     stores partitions UNREPLICATED on executor-local storage and severs
@@ -127,9 +136,24 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
     than the cluster has cores — the small-file artifact where one 2 MB
     parquet file becomes one task and serializes a CPU-bound operator.
 
-    At real scale (file count x row groups >> cores) this is a no-op, so
-    the big-data path never pays an extra shuffle.
+    Only exchange-free frames (scans, projections, filters, checkpoints)
+    are probed; their partition count is known without running anything.
+    A frame with an exchange is adaptive, and asking it for its
+    partitions would run every upstream shuffle and broadcast stage as
+    jobs whose results the next action discards and recomputes. It is
+    returned unchanged: AQE's coalescing keeps at least
+    ``defaultParallelism`` partitions once the shuffle output reaches
+    the minimum partition size (1 MB by default) per core
+    (``parallelismFirst`` is on by default), so at scale this is the
+    no-op the probe would reach, and a small post-shuffle frame keeps
+    the few partitions AQE chose for it.
+
+    At real scale (file count x row groups >> cores) the probe is a
+    no-op too, so the big-data path pays neither a probe job nor a
+    shuffle.
     """
+    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism * min_factor
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

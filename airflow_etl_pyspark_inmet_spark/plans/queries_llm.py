@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..operators.util import lineage_checkpoint
+from ..operators.util import lineage_checkpoint, lineage_checkpoint_eager
 
 from ..operators.dedup import (
     dedup_exact,
@@ -1580,10 +1580,18 @@ def c4_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: every stage keeps its individual operator's 100 TB
     profile (banded LSH, broadcast eval grams / vocab / weights /
-    mixture table, hierarchical pack offsets, per-shard windows). The
-    survivor frame is localCheckpointed once — the point a production
-    run would write intermediate parquet — so the funnel above it runs
-    once, not once per downstream consumer (4 consume it)."""
+    mixture table, hierarchical pack offsets, per-shard windows). Three
+    frames are localCheckpointed — the points a production run would
+    write intermediate parquet — so the funnel above each runs once, not
+    once per downstream consumer: the exact-dedup keepers (3 consumers,
+    eager), the canonical training docs (2 consumers, lazy) and the
+    survivor frame (4 consumers, lazy). A lazy checkpoint is not free at
+    call time: under AQE it runs every upstream shuffle and broadcast
+    stage as its own job then, and only the final stage waits for the
+    first action. Building this DataFrame therefore runs most of the
+    pipeline's Spark jobs (the LSH, connected-components and
+    decontamination stages among them); the returned frame's action runs
+    the packing/sharding tail."""
     from ..operators.curation import pack_sequences, pii_scrub
     from ..operators.dedup import (
         connected_components,
@@ -1606,13 +1614,15 @@ def c4_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 2. exact dedup -> keepers with copy counts
     groups = dedup_exact(base)
+    # three consumers (LSH signatures, verify postings, the canon join):
+    # materialized once instead of re-running normalize + exact dedup
     keepers = base.join(
         groups.select(
             F.col("keep_id").alias("doc_id"),
             F.col("n_copies").alias("exact_copies"),
         ),
         "doc_id",
-    )
+    ).transform(lineage_checkpoint_eager)
     # 3. near-dedup (production LSH path) -> canonical doc per cluster
     pairs = minhash_lsh_pairs(
         keepers, ngram=3, threshold=0.5, broadcast_sizes=True
@@ -1631,7 +1641,16 @@ def c4_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4. decontaminate: %23 docs are the eval benchmark; canonical
     # training docs overlapping them >= 5% are dropped. Docs too short
     # to have 8-grams produce no decon row -> non-contaminated.
-    train = canon.filter(F.col("doc_id") % 23 != 0)
+    # `train` is read by the decontamination grams and the `clean` join,
+    # and again through every consumer of `scrubbed` below. Materialized,
+    # it is exchange-free, so ensure_parallelism can spread a small
+    # `train` over the cores without a probe job; the round-robin
+    # exchange also gives the gram distinct a shuffle that the consumers
+    # share, instead of each re-running the 8-gram explode inside one
+    # fused single-partition stage.
+    train = canon.filter(F.col("doc_id") % 23 != 0).transform(
+        lineage_checkpoint
+    )
     eval_df = base.filter(F.col("doc_id") % 23 == 0)
     dec = decontaminate(
         train.select("doc_id", "text"), eval_df, ngram=8, threshold=0.05

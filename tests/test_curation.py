@@ -9,6 +9,7 @@ extension set mandated by the build brief.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from airflow_etl_pyspark_inmet_spark.operators.curation import (
@@ -248,6 +249,52 @@ def test_c4_pretraining_pipeline_invariants(spark, sf_small):
         assert slices[0][1] == 0, doc
         for (b0, s0, n0), (b1, s1, _) in zip(slices, slices[1:]):
             assert b1 == b0 + 1 and s1 == s0 + n0, doc
+
+
+def test_c4_pretraining_pipeline_job_chain(spark, sf_small, monkeypatch):
+    """Building and running c4 stays within its measured Spark job count
+    (JOBS_C4; a post-shuffle parallelism probe, a lazily rebuilt keepers
+    frame or a join in the convergence probe each add jobs; checkpointing
+    `train` costs a few, and removes the per-consumer re-run of its
+    8-gram explode). The
+    connected-components stage is pinned on its own: it converges in
+    exactly CC_ROUNDS rounds on c4's pairs and runs at most CC_JOBS jobs,
+    so a change in jobs per round shows apart from a change in rounds.
+    Measured at 1, 4 and 32 cores: 64/68/68 c4 jobs, 2 rounds, 25 CC
+    jobs."""
+    from airflow_etl_pyspark_inmet_spark.operators import dedup
+    from airflow_etl_pyspark_inmet_spark.plans.queries_llm import (
+        c4_pretraining_pipeline,
+    )
+
+    JOBS_C4, CC_ROUNDS, CC_JOBS = 68, 2, 25
+    cc = dedup.connected_components
+    seen = []
+
+    def capture(pairs, *args, **kwargs):
+        seen.append(pairs)
+        return cc(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", capture)
+    sc = spark.sparkContext
+
+    def jobs_of(name, fn):
+        sc.setJobGroup(name, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    n = jobs_of(
+        "c4_job_chain", lambda: c4_pretraining_pipeline(spark, sf_small).collect()
+    )
+    assert 0 < n <= JOBS_C4, n
+    (pairs,) = seen
+    n = jobs_of("c4_cc", lambda: cc(pairs, max_iter=CC_ROUNDS).collect())
+    assert 0 < n <= CC_JOBS, n
+    with pytest.raises(RuntimeError, match="still changing"):
+        cc(pairs, max_iter=CC_ROUNDS - 1)
 
 
 def test_m13_multimodal_pack_token_conservation(spark, sf_small):

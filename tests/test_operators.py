@@ -282,6 +282,30 @@ def test_connected_components_raises_at_iteration_cap(spark):
         connected_components(pairs, max_iter=2)
 
 
+def test_ensure_parallelism_starts_no_probe_job(spark, docs):
+    """A post-shuffle frame is adaptive: asking it for its partition count
+    would run its shuffle stages as jobs the next action throws away, so
+    ensure_parallelism returns it without starting any job. A single-file
+    scan has no exchange and is still spread to defaultParallelism."""
+    from airflow_etl_pyspark_inmet_spark.operators.util import (
+        ensure_parallelism,
+    )
+
+    sc = spark.sparkContext
+    grouped = docs.groupBy(F.col("doc_id") % 7).count()
+    group = "test_ensure_parallelism_starts_no_probe_job"
+    sc.setJobGroup(group, group)
+    try:
+        out = ensure_parallelism(grouped)
+        spread = ensure_parallelism(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out is grouped
+    assert docs.rdd.getNumPartitions() < sc.defaultParallelism
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+
+
 def test_ivf_topk_recall_vs_exact(emb):
     from airflow_etl_pyspark_inmet_spark.operators.similarity import (
         cosine_topk,

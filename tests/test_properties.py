@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -486,6 +486,52 @@ def test_label_propagation_equals_bfs_property(spark, raw_edges, k):
             frontier = {v for u in frontier for v in adj[u]} - seen
             seen |= frontier
         assert got[n] == min(seen), (n, k)
+
+
+@settings(**_SETTINGS)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=12),
+            st.integers(min_value=0, max_value=12),
+        ),
+        max_size=30,
+    ),
+    st.integers(min_value=0, max_value=40),
+)
+@example([], 0)
+def test_connected_components_equals_union_find_property(spark, raw, path_len):
+    """Every node's label is the minimum node id of its component, as a
+    Python union-find computes it. Random pairs over 13 ids, plus forced
+    duplicate, reversed and self pairs; a path of up to 40 hops with
+    alternating orientation (ids from 100) needs several pointer-jumping
+    rounds; ``[], 0`` is the empty pair frame. NULL ids are outside the
+    contract."""
+    from airflow_etl_pyspark_inmet_spark.operators.dedup import (
+        connected_components,
+    )
+
+    path = [
+        (101 + i, 100 + i) if i % 2 else (100 + i, 101 + i)
+        for i in range(path_len)
+    ]
+    forced = raw[:3] + [(b, a) for a, b in raw[:3]]
+    forced += [(a, a) for a, _ in raw[:1]]
+    pairs = raw + forced + path
+    root = {}
+
+    def find(x):
+        while root.setdefault(x, x) != x:
+            x = root[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        root[max(ra, rb)] = min(ra, rb)
+    expected = {n: find(n) for n in root}
+    df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
+    got = {r.node: r.comp for r in connected_components(df).collect()}
+    assert got == expected
 
 
 @settings(**_SETTINGS)
